@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotiff_tiler_spark.functions import text as T
-from geotiff_tiler_spark.functions.hashing import HEX_WIDTH
+from geotiff_tiler_spark.functions.hashing import HEX_WIDTH, py_hash64
 
 # Default MinHash family: 16 permutations in 4 bands of 4 rows.
 NUM_HASHES = 16
@@ -706,12 +706,10 @@ def _gram_hash_rows(
 ) -> DataFrame:
     """(doc_id, gh) rows — one row per DISTINCT k-token gram per doc,
     gh = portable_hash64(gram) — computed in one mapInArrow pass with
-    hashlib.md5 (hashing.py_hash64's formula) instead of the interpreted
+    its Python twin hashing.py_hash64 instead of the interpreted
     shingle-pyramid + md5 expression chain. Emission order per doc is
     insertion order (dict.fromkeys), so recomputation is deterministic;
     every consumer is order-invariant regardless."""
-    import hashlib
-
     import pyarrow as pa
 
     def _scan(batches):
@@ -728,10 +726,7 @@ def _gram_hash_rows(
                 grams = dict.fromkeys(
                     " ".join(toks[j : j + k]) for j in range(n)
                 )
-                for g in grams:
-                    out_gh.append(
-                        int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                    )
+                out_gh.extend(py_hash64(g) for g in grams)
                 out_ids.extend([did] * len(grams))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(out_ids, pa.int64()), pa.array(out_gh, pa.int64())],

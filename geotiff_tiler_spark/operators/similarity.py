@@ -14,13 +14,14 @@
   (adaptive_sign_bits) with no EMB_DIM cap.
 - `ivf_topk`: the clustering scale path — bounded-sample k-means lists,
   nprobe probing; centroid assignment switches from plan-literal
-  expressions to a broadcast numpy pandas UDF past IVF_EXPR_MAX_LISTS.
+  expressions to a numpy Arrow UDF past IVF_EXPR_MAX_LISTS.
 
-All vector math is JVM-side (`zip_with` + `aggregate` over doubles);
-no Python UDFs. Float inputs are widened to double BEFORE any product so
-Spark and the DuckDB oracle compute bit-identical sums (same sequential
-order), with a final round(6) absorbing any engine-internal summation
-difference.
+Expression paths widen float inputs to double BEFORE any product so Spark
+and the DuckDB oracle compute bit-identical sums (same sequential order),
+with a final round(6) absorbing any engine-internal summation difference.
+Vector kernels are `mapInArrow` scans or `arrow_udf`s, and every one of
+them reads its vectors through `_vec_matrix`, which fails loudly on null
+or ragged vectors instead of reshaping them into a wrong matrix.
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EMB_DIM = 64
-SIGN_BITS = 4  # legacy single-bucket scheme: 2^4 = 16 LSH buckets
 ANN_BANDS = 4  # banded scheme: independent sign-bit bands (union of matches)
 # Near-dup blocking uses MORE bands than ANN top-k: a pair at cosine t
 # agrees with a random hyperplane w.p. p = 1 - acos(t)/pi, with a whole
@@ -105,23 +105,14 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    """cosine(a, b) rounded to 6 decimals; 0.0 when either norm is 0."""
-    d = _dot(F.col(a), F.col(b))
-    na, nb = _norm(F.col(a)), _norm(F.col(b))
-    cos = F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
-    return df.withColumn(out, F.round(cos, 6))
-
-
 def _with_cosine_prenormed(
     df: DataFrame, a: str, b: str, na: str, nb: str, flat: bool = False
 ) -> DataFrame:
     """cosine from a pre-joined pair with per-ROW norms already computed.
 
-    Identical float ops to `with_cosine` (sqrt(dot(v,v)) then d/(na*nb)),
-    but each vector's norm is evaluated once per row instead of once per
-    PAIR — a ~3x cut of the pair-volume work in the all-pairs stage.
-    Bit-identical results -> same oracles.
+    Same float ops as `cosine_sql` (sqrt(dot(v,v)) then d/(na*nb)), with
+    each vector's norm evaluated once per row instead of once per PAIR —
+    a ~3x cut of the pair-volume work in the all-pairs stage.
 
     `flat` picks the dot form (see `_dot_fold`): the fold is the default
     (wins in every interpreted projection — q16/q17/q33); `ivf_topk`
@@ -170,6 +161,82 @@ def cosine_topk_allpairs(
     )
 
 
+def _vec_matrix(arr, col: str, dim: int | None = None):
+    """(n, dim) float64 matrix from an Arrow list<float|double> array — the
+    one way a vector column enters numpy in this module (both mapInArrow
+    scans, every arrow_udf kernel and the driver fetch).
+
+    Reads the list's flat values buffer: no per-row Python objects, one
+    contiguous copy that widens float32 -> float64 exactly (the SQL plans'
+    cast); `flatten()` honors slice offsets. Raises ValueError naming
+    `col` on a null vector, a null element, or a row whose length is not
+    `dim` (default: the first row's) — flattening alone would drop a null
+    row's slot and reshape the rest into a wrong matrix without error.
+    An empty array gives a (0, dim) matrix."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if arr.null_count:
+        raise ValueError(f"vector column {col!r}: {arr.null_count} null vector(s)")
+    flat = arr.flatten()
+    if flat.null_count:
+        raise ValueError(f"vector column {col!r}: {flat.null_count} null element(s)")
+    n = len(arr)
+    if n == 0:
+        return np.empty((0, dim or 0))
+    lens = pc.list_value_length(arr).to_numpy()
+    width = int(lens[0]) if dim is None else dim
+    if (lens != width).any():
+        raise ValueError(
+            f"vector column {col!r}: ragged vectors, lengths "
+            f"{lens.min()}..{lens.max()}, expected {width}"
+        )
+    flat_np = flat.to_numpy(zero_copy_only=False)
+    return np.ascontiguousarray(flat_np, dtype=np.float64).reshape(n, width)
+
+
+def _list_rows(M):
+    """array<bigint> Arrow column whose row i is M[i] — an (n, w) int64
+    kernel result handed back to Spark without per-row objects."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, w = M.shape
+    offsets = pa.array(np.arange(0, n * w + 1, w, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(M.astype(np.int64).ravel()))
+
+
+def _fold_cosine(A, B):
+    """Row-pair cosine with the SQL fold's exact float ops — the one numpy
+    home of that rule: float64 inputs, a left-associated 0.0-seeded
+    accumulation for the dot and both squared norms (numpy elementwise +=
+    in a fixed i = 0..dim-1 loop is per-element exactly ((0.0+p0)+p1)+...),
+    cosine = dot/(|a|*|b|), 0.0 when either norm is 0. Bit-identical
+    doubles to `_with_cosine_prenormed` before rounding."""
+    import numpy as np
+
+    dot = np.zeros(len(A))
+    a2 = np.zeros(len(A))
+    b2 = np.zeros(len(A))
+    for i in range(A.shape[1]):
+        dot += A[:, i] * B[:, i]
+        a2 += A[:, i] * A[:, i]
+        b2 += B[:, i] * B[:, i]
+    an = np.sqrt(a2)
+    bn = np.sqrt(b2)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dot / (an * bn)
+    cos[(an == 0.0) | (bn == 0.0)] = 0.0
+    return cos
+
+
+def _empty_topk(emb: DataFrame, score: str) -> DataFrame:
+    """The zero-row (query_id, rank, neighbor_id, <score>) top-k result."""
+    return emb.sparkSession.createDataFrame(
+        [], f"query_id long, rank long, neighbor_id long, {score} double"
+    )
+
+
 # |spark.round(x, 6) - np.round(x, 6)| <= ~1e-6 (both land within half a
 # unit-in-the-6th-decimal of x; they differ only on exact .5 boundaries,
 # HALF_UP vs HALF_EVEN, and by ~1e-16 representation error). Candidate
@@ -185,46 +252,25 @@ _ROUND6_MARGIN = 3e-6
 _ROUND6_MARGIN_BLAS = 4e-6
 
 
-def _cosine_pair_udf():
-    """Arrow-batched pandas UDF scoring (q_vec, c_vec) PAIR rows with the
-    exact SQL-fold float ops: float->double widening, left-associated
-    0.0-seeded accumulation for dot and both norms, cosine =
-    dot/(q_norm*c_norm), 0.0 on zero norms — bit-identical doubles to
-    `_with_cosine_prenormed` (parity-tested via the q17/q33 paths).
-    Replaces the INTERPRETED 64-step fold in candidate-scoring
-    projections (~10 us/pair above a join) with one vectorized batch
-    pass; norms move inside the kernel, so callers ship only (id, vec)
-    into the candidate joins (guide §2.3: narrower exchanges).
-    Marked asNondeterministic for the same reason as
+def _cosine_pair_udf(a: str, b: str):
+    """Arrow UDF scoring (a, b) vector PAIR rows with `_fold_cosine` —
+    bit-identical doubles to `_with_cosine_prenormed` (parity-tested via
+    the q17/q33 paths). Replaces the INTERPRETED 64-step fold in
+    candidate-scoring projections (~10 us/pair above a join) with one
+    vectorized batch pass; norms move inside the kernel, so callers ship
+    only (id, vec) into the candidate joins (guide §2.3: narrower
+    exchanges). Marked asNondeterministic for the same reason as
     _centroid_argmin_udf: a threshold filter on the output column
     (neardup_pairs_banded) must not clone the evaluation below a
     pushed-down predicate (guide §4.4)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    def _cos(qv, cv):
-        if len(qv) == 0:
-            return pd.Series([], dtype="float64")
-        Q = _stack_rows(qv)
-        C = _stack_rows(cv)
-        m, dim = Q.shape
-        acc = np.zeros(m)
-        q2 = np.zeros(m)
-        c2 = np.zeros(m)
-        for i in range(dim):
-            acc += Q[:, i] * C[:, i]
-            q2 += Q[:, i] * Q[:, i]
-            c2 += C[:, i] * C[:, i]
-        qn = np.sqrt(q2)
-        cn = np.sqrt(c2)
-        den = qn * cn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = acc / den
-        cos[(qn == 0.0) | (cn == 0.0)] = 0.0
-        return pd.Series(cos)
+    def _cos(av, bv):
+        A = _vec_matrix(av, a)
+        return pa.array(_fold_cosine(A, _vec_matrix(bv, b, A.shape[1])))
 
-    return pandas_udf(_cos, "double").asNondeterministic()
+    return arrow_udf(_cos, "double").asNondeterministic()
 
 
 def _with_cosine_arrow(df: DataFrame, a: str, b: str) -> DataFrame:
@@ -232,7 +278,7 @@ def _with_cosine_arrow(df: DataFrame, a: str, b: str) -> DataFrame:
     same output column contract as `_with_cosine_prenormed`, no
     pre-joined norm columns needed."""
     return df.withColumn(
-        "cosine", F.round(_cosine_pair_udf()(F.col(a), F.col(b)), 6)
+        "cosine", F.round(_cosine_pair_udf(a, b)(F.col(a), F.col(b)), 6)
     )
 
 
@@ -257,14 +303,10 @@ def cosine_topk(
     a numpy-rounded threshold carrying _ROUND6_MARGIN_BLAS — a provable
     superset of every row whose Spark-rounded value can rank <= k (see
     the margin notes above) — then RE-SCORES only the ~queries*k
-    survivors with the SAME float ops as the SQL fold: float->double
-    widening, a left-associated 0.0-seeded accumulation per coordinate
-    (numpy elementwise += in a fixed i=0..dim-1 loop is per-element
-    exactly ((0.0+p0)+p1)+...), norms likewise, cosine =
-    dot/(q_norm*c_norm), 0.0 on zero norms — so every emitted double is
-    the bit the SQL plan would produce. Rounding and ranking stay in
-    Spark SQL — F.round + window on ~n_partitions * queries * ~k
-    candidate rows — so round-semantics and tie-breaks are untouched.
+    survivors with `_fold_cosine`, so every emitted double is the bit the
+    SQL plan would produce. Rounding and ranking stay in Spark SQL —
+    F.round + window on ~n_partitions * queries * ~k candidate rows — so
+    round-semantics and tie-breaks are untouched.
 
     The old plan shuffled ALL n*n/query_mod scored pairs into the window
     and evaluated the 64-term fold interpreted above a
@@ -280,15 +322,9 @@ def cosine_topk(
         emb.filter(F.col(id_col) % query_mod == 0), id_col, vec_col
     )
     if len(qids) == 0:
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, rank long, neighbor_id long, cosine double"
-        )
+        return _empty_topk(emb, "cosine")
     nq, dim = Q.shape
-    # q_norm exactly as the SQL plan: left-assoc sum of squares, sqrt
-    qacc = np.zeros(nq)
-    for i in range(dim):
-        qacc += Q[:, i] * Q[:, i]
-    qnorm = np.sqrt(qacc)
+    qnorm = np.sqrt(np.einsum("ij,ij->i", Q, Q))  # prune-only, like cnorm_a
     kk = k
     margin = _ROUND6_MARGIN
     margin_blas = _ROUND6_MARGIN_BLAS
@@ -301,9 +337,8 @@ def cosine_topk(
         cand_i: list = []
         cand_c: list = []
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            nids_all, X = _arrow_ids_vecs(rb.column(0), rb.column(1))
+            nids_all = np.asarray(rb.column(0), dtype=np.int64)
+            X = _vec_matrix(rb.column(1), vec_col, dim)
             for s in range(0, len(X), CHUNK):
                 C = X[s : s + CHUNK]
                 nids = nids_all[s : s + CHUNK]
@@ -330,25 +365,10 @@ def cosine_topk(
                 else:
                     keep = np.isfinite(cos)
                 rows, cols = np.nonzero(keep)
-                # exact pass on the survivors only: the SQL fold's float
-                # ops, vectorized over candidate pairs
-                Qg = Q[rows]
-                Cg = C[cols]
-                m = len(rows)
-                acc = np.zeros(m)
-                c2 = np.zeros(m)
-                for i in range(dim):
-                    acc += Qg[:, i] * Cg[:, i]
-                    c2 += Cg[:, i] * Cg[:, i]
-                cn_e = np.sqrt(c2)
-                qn_e = qnorm[rows]
-                den_e = qn_e * cn_e
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos_e = acc / den_e
-                cos_e[(qn_e == 0.0) | (cn_e == 0.0)] = 0.0
+                # exact pass on the survivors only
                 cand_q.append(rows)
                 cand_i.append(nids[cols])
-                cand_c.append(cos_e)
+                cand_c.append(_fold_cosine(Q[rows], C[cols]))
         if not cand_q:
             return
         q_idx = np.concatenate(cand_q)
@@ -380,54 +400,6 @@ def cosine_topk(
         _scan, "query_id long, neighbor_id long, cosine double"
     )
     scored = cand.withColumn("cosine", F.round(F.col("cosine"), 6))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
-def sign_bucket(vec_col, bits: int = SIGN_BITS):
-    """LSH bucket id from the sign of the first `bits` coordinates."""
-    acc = F.lit(0)
-    for j in range(bits):
-        acc = acc + F.when(
-            F.element_at(F.col(vec_col) if isinstance(vec_col, str) else vec_col, j + 1)
-            > 0,
-            F.lit(1 << j),
-        ).otherwise(F.lit(0))
-    return acc.cast("bigint")
-
-
-def lsh_ann_topk(
-    emb: DataFrame,
-    k: int = 5,
-    query_mod: int = 25,
-    bits: int = SIGN_BITS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k restricted to the query's LSH bucket (equi-join scale path)."""
-    from pyspark.sql.window import Window
-
-    bucketed = emb.withColumn("bucket", sign_bucket(vec_col, bits))
-    q = bucketed.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-        "bucket",
-    )
-    c = bucketed.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-        "bucket",
-    )
-    joined = q.join(c, "bucket").filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = _with_cosine_prenormed(joined, "q_vec", "c_vec", "q_norm", "c_norm")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -472,35 +444,31 @@ def hyperplane_signs(bands: int, bits: int, dim: int = EMB_DIM) -> list[list[int
     return [list(_row(b, j, dim)) for b in range(bands) for j in range(bits)]
 
 
-def hp_buckets_udf(bits: int, bands: int, dim: int = EMB_DIM):
-    """Arrow-batched pandas UDF: embedding -> array of `bands` bucket ids.
+def hp_buckets_udf(bits: int, bands: int, dim: int = EMB_DIM, vec_col: str = "embedding"):
+    """Arrow UDF: embedding -> array of `bands` bucket ids.
 
     Per batch it is ONE int64 matmul (n, dim) @ (dim, bands*bits) over the
     floor-quantized vectors plus a bit-pack — no per-row Python, no plan
     literals (the round-2 IVF lesson: 4096-literal expression trees blow up
     codegen; a broadcast numpy constant inside an Arrow UDF does not)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     S = np.asarray(hyperplane_signs(bands, bits, dim), dtype=np.int64).T  # (dim, bands*bits)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
 
     def _buckets(vecs):
-        if len(vecs) == 0:  # Spark may hand pandas UDFs zero-row batches
-            return pd.Series([], dtype=object)
-        X = _stack_rows(vecs)
+        X = _vec_matrix(vecs, vec_col, dim)
         Q = np.floor(X * HP_QUANT).astype(np.int64)
         P = (Q @ S) > 0  # (n, bands*bits) sign bits
-        B = P.reshape(len(X), bands, bits).astype(np.int64) @ weights  # (n, bands)
-        return pd.Series(list(B))
+        return _list_rows(P.reshape(len(X), bands, bits).astype(np.int64) @ weights)
 
-    return pandas_udf(_buckets, "array<bigint>")
+    return arrow_udf(_buckets, "array<bigint>")
 
 
 def _band_explode(df: DataFrame, vec_col: str, bits: int, bands: int) -> DataFrame:
     """(row, band, bucket) — one output row per band via posexplode."""
-    arr = hp_buckets_udf(bits, bands)(F.col(vec_col))
+    arr = hp_buckets_udf(bits, bands, vec_col=vec_col)(F.col(vec_col))
     return df.select("*", F.posexplode(arr).alias("band", "bucket"))
 
 
@@ -653,11 +621,6 @@ def cosine_sql(a: str, b: str, dim: int = EMB_DIM) -> str:
     )
 
 
-def sign_bucket_sql(vec: str, bits: int = SIGN_BITS) -> str:
-    terms = [f"CASE WHEN {vec}[{j + 1}] > 0 THEN {1 << j} ELSE 0 END" for j in range(bits)]
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
 def hp_band_bucket_sql(vec: str, band: int, bits: int, dim: int = EMB_DIM) -> str:
     """DuckDB twin of one band of hp_buckets_udf.
 
@@ -705,47 +668,21 @@ def adaptive_ivf_clusters(n: int, lo: int = 8, hi: int = 4096) -> int:
     return min(hi, max(lo, int(4 * math.sqrt(max(n, 1)))))
 
 
-def _chunked_d2(X, cent, chunk: int = 4096):
-    """(len(X), len(cent)) squared distances via the matmul identity
-    |x|^2 + |c|^2 - 2 x.c, in bounded row chunks.
-
-    The round-2/3 form used the expanded-difference broadcast tensor
-    ((x - c)^2 summed), which is memory-bound: chunk*nlist*dim float64
-    temporaries make the >64-list path ~10x slower than BLAS (measured:
-    the 200k-row IVF bench stage took 382 s; the matmul form is
-    compute-bound at ~2 flops/element). Peak memory is chunk*nlist
-    doubles for the output block plus the (nlist, dim) centroid matrix.
-
-    Numerics: d2 values differ from the expanded form in the last ulps
-    (different summation trees), so this kernel is for ARGMIN/ARGSORT
-    selection only — ties between bit-distinct centroids are measure-zero,
-    and bit-IDENTICAL centroids (kmeans re-seeded duplicates) still
-    produce bit-equal d2 in both forms, so first-minimal-index tie
-    resolution is unchanged. Cross-engine q36 parity is unaffected: the
-    centroids come from the SHARED kmeans_fit (both engines see the same
-    literals) and the contract-checked assignment path (<=64 lists) is
-    the sequential-fold expression plan, not this kernel."""
-    import numpy as np
-
-    Xq = np.ascontiguousarray(X, dtype=np.float64)
-    C = np.ascontiguousarray(cent, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-    out = np.empty((len(Xq), len(C)), dtype=np.float64)
-    for s in range(0, len(Xq), chunk):
-        B = Xq[s : s + chunk]
-        out[s : s + chunk] = (
-            (B * B).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (B @ C.T)
-        )
-    return out
-
-
 _NC_SCRATCH: dict = {}
 
 
 def _nearest_centroids(X, cent, p: int = 1, chunk: int = 1024, dtype=None):
     """(len(X), p) indices of the p nearest centroids per row, ordered by
-    (d2 asc, centroid id asc) — the selection form of `_chunked_d2` for the
-    >64-list Arrow-UDF hot path.
+    (d2 asc, centroid id asc) — the >64-list Arrow-UDF hot path and the
+    kmeans_fit assignment step.
+
+    Distances use the matmul identity |x|^2 + |c|^2 - 2 x.c (BLAS,
+    compute-bound; the expanded-difference tensor form was ~10x slower).
+    Its values differ from the sequential fold in the last ulps, so it is
+    for SELECTION only: ties between bit-distinct centroids are
+    measure-zero, and bit-IDENTICAL centroids (kmeans re-seeded
+    duplicates) still give bit-equal d2, so first-minimal-index ties
+    resolve as in the fold.
 
     Never materializes the full (n, nlist) distance matrix: one
     (chunk, nlist) scratch block is reused in-place across chunks (matmul
@@ -754,7 +691,7 @@ def _nearest_centroids(X, cent, p: int = 1, chunk: int = 1024, dtype=None):
     memory is chunk*nlist instead of n*nlist, and — measured on this box
     — fresh large allocations first-touch at ~70 MB/s while reused pages
     stream at GB/s (300+ GFLOPS vs 1.2 effective). The cross-call cache
-    is the round-5 addition: a pandas UDF calls this once per ARROW BATCH
+    is the round-5 addition: an Arrow UDF calls this once per ARROW BATCH
     (10k rows), so a per-call allocation paid the ~0.5 s first-touch of a
     32 MB scratch a hundred times per partition — the dominant cost of
     the 1M-row IVF stage. Python UDF workers are single-threaded
@@ -834,6 +771,8 @@ def kmeans_fit(X, n_clusters: int, n_iter: int = 10, seed: int = 42):
     rng = np.random.default_rng(seed)
     cent = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)]
     k = len(cent)
+    if k == 0:  # no points, no centroids
+        return cent
     # float32 distances for the training assignment: halves the
     # bandwidth-bound argmin pass + doubles matmul throughput (train is
     # the stage's driver-side serial fraction; measured 9.0 -> 5.3 s per
@@ -887,48 +826,16 @@ def train_ivf_centroids(
     return kmeans_fit(X, n_clusters, n_iter, seed)
 
 
-def _arrow_ids_vecs(id_arr, vec_arr):
-    """(ids int64, X (n, dim) float64) from a pair of Arrow Arrays
-    (integer ids, list<double> vectors) — via the list column's flat
-    values buffer, never per-row Python objects. The conventional
-    `np.stack(pdf[vec].to_numpy())` materializes one ndarray object per
-    row and measures ~130 us/row on this VM (100k rows: 12.9 s); this
-    path is two O(1)-object buffer views plus one contiguous copy
-    (100k rows: 0.04 s). `flatten()` honors array slicing/offsets.
-    Assumes non-null, equal-length vectors — true for every embedding
-    source here."""
-    import numpy as np
-
-    ids = id_arr.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    flat = vec_arr.flatten().to_numpy(zero_copy_only=False)
-    n = len(ids)
-    X = np.ascontiguousarray(flat, dtype=np.float64).reshape(n, -1 if n else 0)
-    return ids, X
-
-
-def _stack_rows(vecs):
-    """(n, dim) float64 from a pandas Series of equal-length float rows —
-    the fast stack for pandas-UDF bodies (which receive pandas, not Arrow).
-    np.concatenate over the Python LIST of row arrays is ~80x faster than
-    np.stack(series.to_numpy()): handing numpy an OBJECT ndarray of rows
-    takes its slow path (measured 7.3 s vs 0.09 s per 100k x 64 rows on
-    this VM). Values identical — a pure copy, no arithmetic."""
-    import numpy as np
-
-    return np.concatenate(list(vecs), dtype=np.float64).reshape(len(vecs), -1)
-
-
 def _fetch_vecs_arrow(df, id_col: str, vec_col: str):
     """Collect (id, vec) rows to the driver in id order as
-    (ids int64, X (n, dim) float64) — DataFrame.toArrow + the flat-buffer
-    extraction of _arrow_ids_vecs, replacing toPandas + np.stack (which
-    cost ~4 s for the 32k-row training sample on this VM)."""
+    (ids int64, X (n, dim) float64) — DataFrame.toArrow + `_vec_matrix`,
+    replacing toPandas + np.stack (which cost ~4 s for the 32k-row
+    training sample on this VM)."""
     import numpy as np
 
-    tbl = df.select(id_col, vec_col).toArrow().combine_chunks()
-    if tbl.num_rows == 0:
-        return np.empty(0, dtype=np.int64), np.empty((0, 0))
-    ids, X = _arrow_ids_vecs(tbl.column(0).chunk(0), tbl.column(1).chunk(0))
+    tbl = df.select(id_col, vec_col).toArrow()
+    ids = np.asarray(tbl.column(0), dtype=np.int64)
+    X = _vec_matrix(tbl.column(1).combine_chunks(), vec_col)
     order = np.argsort(ids, kind="stable")
     return ids[order], X[order]
 
@@ -937,10 +844,13 @@ def _fetch_sorted_sample(emb, sample: int, id_col: str, vec_col: str):
     """The `sample` smallest-id rows as a (sample, dim) float64 matrix in
     id order — same rows as ``ORDER BY id LIMIT sample`` (the oracle
     generators' formulation), fetched via the two-narrow-pass plan
-    described in train_ivf_centroids' docstring."""
+    described in train_ivf_centroids' docstring; (0, 0) when `emb` is
+    empty."""
+    import numpy as np
+
     ids = [r[0] for r in emb.select(id_col).orderBy(id_col).limit(sample).collect()]
     if not ids:
-        raise ValueError("_fetch_sorted_sample: empty input")
+        return np.empty((0, 0))
     _, X = _fetch_vecs_arrow(
         emb.select(id_col, vec_col).filter(F.col(id_col) <= F.lit(ids[-1])),
         id_col,
@@ -956,8 +866,8 @@ def _fetch_sorted_sample(emb, sample: int, id_col: str, vec_col: str):
 IVF_EXPR_MAX_LISTS = 64
 
 
-def _centroid_argmin_udf(centroids):
-    """Arrow-batched pandas UDF: embedding -> nearest-centroid id.
+def _centroid_argmin_udf(centroids, vec_col: str = "embedding"):
+    """Arrow UDF: embedding -> nearest-centroid id.
 
     The (nlist, dim) float64 centroid matrix ships once per executor in
     the UDF closure; per batch the work is one chunked numpy distance +
@@ -972,18 +882,16 @@ def _centroid_argmin_udf(centroids):
     only optimizations lost are filter pushdowns through this projection,
     which don't apply to the index build (no selective filters below)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
     C = np.asarray(centroids, dtype=np.float64)
 
     def _assign(vecs):
-        if len(vecs) == 0:  # zero-row Arrow batch: np.stack would raise
-            return pd.Series([], dtype=np.int64)
-        X = _stack_rows(vecs)
-        return pd.Series(_nearest_centroids(X, C, p=1)[:, 0])
+        X = _vec_matrix(vecs, vec_col, C.shape[1])
+        return pa.array(_nearest_centroids(X, C, p=1)[:, 0])
 
-    return pandas_udf(_assign, "bigint").asNondeterministic()
+    return arrow_udf(_assign, "bigint").asNondeterministic()
 
 
 def ivf_assign(emb, centroids, vec_col: str = "embedding"):
@@ -1002,7 +910,7 @@ def ivf_assign(emb, centroids, vec_col: str = "embedding"):
     expression path is pytest-asserted at small scale."""
     if len(centroids) > IVF_EXPR_MAX_LISTS:
         return emb.withColumn(
-            "ivf_cluster", _centroid_argmin_udf(centroids)(F.col(vec_col))
+            "ivf_cluster", _centroid_argmin_udf(centroids, vec_col)(F.col(vec_col))
         )
     dists = []
     for c in centroids:
@@ -1014,23 +922,19 @@ def ivf_assign(emb, centroids, vec_col: str = "embedding"):
     return emb.withColumn("ivf_cluster", best.cast("bigint"))
 
 
-def _centroid_probes_udf(centroids, nprobe: int):
-    """Arrow-batched pandas UDF: query vector -> array of the `nprobe`
-    nearest centroid ids (stable argsort: distance asc, cluster id asc)."""
+def _centroid_probes_udf(centroids, nprobe: int, vec_col: str = "embedding"):
+    """Arrow UDF: query vector -> array of the `nprobe` nearest centroid
+    ids (stable argsort: distance asc, cluster id asc)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     C = np.asarray(centroids, dtype=np.float64)
     p = min(nprobe, len(C))
 
     def _probes(vecs):
-        if len(vecs) == 0:  # zero-row Arrow batch: np.stack would raise
-            return pd.Series([], dtype=object)
-        X = _stack_rows(vecs)
-        return pd.Series(list(_nearest_centroids(X, C, p=p)))
+        return _list_rows(_nearest_centroids(_vec_matrix(vecs, vec_col, C.shape[1]), C, p=p))
 
-    return pandas_udf(_probes, "array<bigint>")
+    return arrow_udf(_probes, "array<bigint>")
 
 
 def ivf_build_index(emb, centroids, id_col: str = "vec_id", vec_col: str = "embedding"):
@@ -1100,7 +1004,7 @@ def ivf_probes(q0, centroids, nprobe: int, carry: tuple[str, ...] = ("q_vec",)):
         return q0.select(
             "query_id", *carry,
             F.explode(
-                _centroid_probes_udf(centroids, nprobe)(F.col(vec_col))
+                _centroid_probes_udf(centroids, nprobe, vec_col)(F.col(vec_col))
             ).alias("ivf_cluster"),
         )
     dists = []
@@ -1148,13 +1052,14 @@ def ivf_topk(
     plan picked BuildRight: the 1M x 64-double CORPUS was the broadcast
     side (~600 MB collected to the driver and reshipped) — the round-4
     VERDICT's measured scale-killer."""
-    import numpy as np
     from pyspark.sql.window import Window
 
     if n_clusters is None:
         n_clusters = adaptive_ivf_clusters(n if n is not None else emb.count())
     if centroids is None:
         centroids = train_ivf_centroids(emb, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col)
+    if len(centroids) == 0:  # trained on an empty input
+        return _empty_topk(emb, "cosine")
     c = index if index is not None else ivf_build_index(emb, centroids, id_col, vec_col)
     # query probes: nprobe nearest centroids per query (small python on the
     # driver is avoided — distances to all centroids are plan expressions,
@@ -1234,7 +1139,7 @@ def _pq_subspace_d2(Xsub, C, out=None, scratch=None):
     acc starts at 0.0 and adds (x_d - c_d)^2 in ascending d, the exact
     float-op order of the oracle's left-associated SQL sum (and of the
     JVM aggregate() fold), so argmin/ADC sums are bit-identical
-    cross-engine. The matmul-identity kernel (_chunked_d2) is NOT used
+    cross-engine. The matmul-identity kernel (_nearest_centroids) is NOT used
     here: its summation tree differs in the last ulps, and PQ ties are
     COMMON (duplicate docs share codes), not measure-zero.
 
@@ -1288,36 +1193,46 @@ def pq_encode(emb, books, id_col: str = "vec_id", vec_col: str = "embedding"):
     vector instead of 256/512, scanned by every subsequent query; the
     codebooks (m x ksub x dsub doubles) ride along in the table metadata.
     """
-    enc = _pq_pack_udf(books)
+    enc = _pq_pack_udf(books, vec_col)
     return emb.select(F.col(id_col).alias("vec_id_pq"), enc(F.col(vec_col)).alias("pq_code"))
 
 
-def _pq_pack_udf(books):
-    """Arrow-batched pandas UDF: embedding -> the m sub-codes packed into
-    ONE bigint (code_j in bits [8j, 8j+8)). Shared by pq_encode and
-    ivfpq_build_index. asNondeterministic: same Catalyst double-eval
-    hazard as _centroid_argmin_udf (join on the output column ->
-    isnotnull pushed below the projection re-runs the UDF)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+def _pq_packer(books):
+    """(dim, pack): the vector width the books cover and pack(X), which
+    maps an (n, dim) matrix to its m sub-codes packed into one int64 per
+    row (code_j in bits [8j, 8j+8)) — the one packing rule of pq_encode
+    and ivfpq_build_index. Raises on the driver when the books do not fit
+    that layout."""
+    import numpy as np
 
     if len(books) > 8 or any(len(b) > 256 for b in books):
         raise ValueError("pq code packing supports m <= 8, ksub <= 256")
-    B = [b.copy() for b in books]
+    B = [np.array(b, dtype=np.float64) for b in books]
 
-    def _enc(vecs):
-        import numpy as np
-
-        if len(vecs) == 0:
-            return pd.Series([], dtype=np.int64)
-        X = _stack_rows(vecs)
+    def pack(X):
         codes = pq_encode_codes(X, B)
         packed = np.zeros(len(X), dtype=np.int64)
         for j in range(codes.shape[1]):
             packed |= codes[:, j] << (8 * j)
-        return pd.Series(packed)
+        return packed
 
-    return pandas_udf(_enc, "bigint").asNondeterministic()
+    return sum(b.shape[1] for b in B), pack
+
+
+def _pq_pack_udf(books, vec_col: str = "embedding"):
+    """Arrow UDF: embedding -> the packed PQ code (`_pq_packer`). Shared by
+    pq_encode and ivfpq_build_index. asNondeterministic: same Catalyst
+    double-eval hazard as _centroid_argmin_udf (join on the output column
+    -> isnotnull pushed below the projection re-runs the UDF)."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+
+    dim, pack = _pq_packer(books)
+
+    def _enc(vecs):
+        return pa.array(pack(_vec_matrix(vecs, vec_col, dim)))
+
+    return arrow_udf(_enc, "bigint").asNondeterministic()
 
 
 def pq_topk(
@@ -1338,7 +1253,7 @@ def pq_topk(
         a pq_encode table, just reads codes) and emits each partition's
         EXACT (adc, neighbor_id)-lexicographic top-k per query — k rows
         per (partition, query), never the distance matrix; Arrow batches
-        are consumed via their flat values buffer (_arrow_ids_vecs), so
+        are consumed via their flat values buffer (_vec_matrix), so
         the corpus never materializes per-row Python objects;
       * the query side (queries x m x ksub doubles + ids) is a
         closure-broadcast numpy constant — queries << corpus by
@@ -1362,10 +1277,9 @@ def pq_topk(
     )
     out_schema = "query_id long, neighbor_id long, adc double"
     if len(qids) == 0:
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, rank long, neighbor_id long, adc double"
-        )
-    dsub = Q.shape[1] // m
+        return _empty_topk(emb, "adc")
+    dim = Q.shape[1]
+    dsub = dim // m
     # lut[q, j, ci]: the oracle's d2(query sub-vector, codebook row)
     lut = np.empty((len(Q), m, len(books[0])), dtype=np.float64)
     for j in range(m):
@@ -1419,16 +1333,13 @@ def pq_topk(
         mask_buf = None
         eq_buf = None
         enc_work: dict = {}  # pq_encode_codes per-chunk workspaces
-        seen = False
         luts = [np.ascontiguousarray(lut_b[:, j, :]) for j in range(m)]
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            seen = True
-            # Arrow flat-buffer extraction (mapInArrow): no per-row pandas
-            # objects — the np.stack path cost ~130 us/row, ~4 s per
-            # 31k-row partition at the 1M-row bench stage
-            nids_all, X = _arrow_ids_vecs(rb.column(0), rb.column(1))
+            # Arrow flat-buffer extraction: no per-row Python objects —
+            # the np.stack path cost ~130 us/row, ~4 s per 31k-row
+            # partition at the 1M-row bench stage
+            nids_all = np.asarray(rb.column(0), dtype=np.int64)
+            X = _vec_matrix(rb.column(1), vec_col, dim)
             for s in range(0, len(X), PQ_SCAN_CHUNK):
                 codes = pq_encode_codes(X[s : s + PQ_SCAN_CHUNK], B, work=enc_work)
                 nids = nids_all[s : s + PQ_SCAN_CHUNK]
@@ -1474,8 +1385,6 @@ def pq_topk(
                 # survive per group and the q-major reshape is aligned
                 pool_d = cd[order][keepm].reshape(nq, kk)
                 pool_i = ci[order][keepm].reshape(nq, kk)
-        if not seen:
-            return
         keep = np.isfinite(pool_d)
         qcol = np.broadcast_to(qids_b[:, None], pool_d.shape)
         yield pa.RecordBatch.from_pydict(
@@ -1536,38 +1445,30 @@ def pq_subspace_d2_sql(vec: str, cvec: str, j_expr: str, dsub: int) -> str:
 # stays exact float64, only corpus vectors are quantized.
 
 
-def _assign_pack_udf(centroids, books):
-    """Arrow-batched pandas UDF: embedding -> struct(ivf_cluster, pq_code)
-    — coarse assignment AND PQ packing in ONE worker round, so each
-    corpus vector crosses the Arrow boundary exactly once (two separate
-    UDFs in one projection serialize the embedding column twice; measured
-    on the 1M-row stage). Assignment is _nearest_centroids (identical to
-    _centroid_argmin_udf), packing is pq_encode_codes (identical to
+def _assign_pack_udf(centroids, books, vec_col: str = "embedding"):
+    """Arrow UDF: embedding -> struct(ivf_cluster, pq_code) — coarse
+    assignment AND PQ packing in ONE worker round, so each corpus vector
+    crosses the Arrow boundary exactly once (two separate UDFs in one
+    projection serialize the embedding column twice; measured on the
+    1M-row stage). Assignment is _nearest_centroids (identical to
+    _centroid_argmin_udf), packing is `_pq_packer` (identical to
     _pq_pack_udf) — bit-parity with the two-step path is pytest-asserted.
     asNondeterministic for the same Catalyst double-eval hazard."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    if len(books) > 8 or any(len(b) > 256 for b in books):
-        raise ValueError("pq code packing supports m <= 8, ksub <= 256")
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
+    _, pack = _pq_packer(books)
     C = np.asarray(centroids, dtype=np.float64)
-    B = [b.copy() for b in books]
 
     def _both(vecs):
-        if len(vecs) == 0:
-            return pd.DataFrame({"ivf_cluster": pd.Series([], dtype=np.int64),
-                                 "pq_code": pd.Series([], dtype=np.int64)})
-        X = _stack_rows(vecs)
+        X = _vec_matrix(vecs, vec_col, C.shape[1])
         cl = _nearest_centroids(X, C, p=1)[:, 0]
-        codes = pq_encode_codes(X, B)
-        packed = np.zeros(len(X), dtype=np.int64)
-        for j in range(codes.shape[1]):
-            packed |= codes[:, j] << (8 * j)
-        return pd.DataFrame({"ivf_cluster": cl, "pq_code": packed})
+        return pa.StructArray.from_arrays(
+            [pa.array(cl), pa.array(pack(X))], names=["ivf_cluster", "pq_code"]
+        )
 
-    return pandas_udf(
+    return arrow_udf(
         _both, "struct<ivf_cluster: bigint, pq_code: bigint>"
     ).asNondeterministic()
 
@@ -1587,7 +1488,7 @@ def ivfpq_build_index(emb, centroids, books, id_col: str = "vec_id", vec_col: st
     nprobe lists' partitions (dynamic partition pruning, same plan as
     test_written_ivf_index_scan_is_partition_pruned)."""
     if len(centroids) > IVF_EXPR_MAX_LISTS:
-        both = _assign_pack_udf(centroids, books)(F.col(vec_col)).alias("_ap")
+        both = _assign_pack_udf(centroids, books, vec_col)(F.col(vec_col)).alias("_ap")
         return emb.select(F.col(id_col).alias("neighbor_id"), both).select(
             "neighbor_id", F.col("_ap.ivf_cluster").alias("ivf_cluster"),
             F.col("_ap.pq_code").alias("pq_code"),
@@ -1596,7 +1497,7 @@ def ivfpq_build_index(emb, centroids, books, id_col: str = "vec_id", vec_col: st
     return assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col("ivf_cluster"),
-        _pq_pack_udf(books)(F.col(vec_col)).alias("pq_code"),
+        _pq_pack_udf(books, vec_col)(F.col(vec_col)).alias("pq_code"),
     )
 
 
@@ -1620,7 +1521,7 @@ def ivfpq_read_index(spark, path: str):
 
 
 def _adc_lut_udf(qids, Q, books):
-    """Arrow-batched pandas UDF: (query_id, packed corpus code) ->
+    """Arrow UDF: (query_id, packed corpus code) ->
     asymmetric squared L2, read off per-query lookup tables built ONCE in
     the closure (the pq_topk LUT pattern: nq x m x ksub doubles — bounded
     because queries << corpus by construction, the same constraint as the
@@ -1634,8 +1535,8 @@ def _adc_lut_udf(qids, Q, books):
     including under the ADC ties duplicate docs produce. `qids` must be
     sorted ascending (as _fetch_vecs_arrow returns)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
     m = len(books)
     dsub = Q.shape[1] // m
@@ -1645,16 +1546,14 @@ def _adc_lut_udf(qids, Q, books):
     qs = np.asarray(qids, dtype=np.int64)
 
     def _adc(qid_s, code_s):
-        if len(qid_s) == 0:
-            return pd.Series([], dtype=np.float64)
-        qi = np.searchsorted(qs, qid_s.to_numpy(dtype=np.int64))
-        packed = code_s.to_numpy(dtype=np.int64)
+        qi = np.searchsorted(qs, np.asarray(qid_s, dtype=np.int64))
+        packed = np.asarray(code_s, dtype=np.int64)
         adc = luts[0][qi, packed & 0xFF]
         for j in range(1, m):
             adc = adc + luts[j][qi, (packed >> (8 * j)) & 0xFF]
-        return pd.Series(adc)
+        return pa.array(adc)
 
-    return pandas_udf(_adc, "double")
+    return arrow_udf(_adc, "double")
 
 
 def ivfpq_topk(
@@ -1703,9 +1602,7 @@ def ivfpq_topk(
     queries = emb.filter(F.col(id_col) % query_mod == 0)
     qids, Q = _fetch_vecs_arrow(queries, id_col, vec_col)
     if len(qids) == 0:
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, rank long, neighbor_id long, adc double"
-        )
+        return _empty_topk(emb, "adc")
     q0 = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )

@@ -6,6 +6,8 @@ Every knob here is a plain public Spark conf:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) —
   hot H3 cells / hot domains are the expected skew source (north_rule).
 - Arrow on for the pandas-UDF slow path.
+- Python workers get the package's parent directory on PYTHONPATH, so
+  kernels that reference engine functions unpickle from any cwd.
 - shuffle partitions sized for local mode; on a real cluster AQE coalesces
   from a deliberately high initial number.
 """
@@ -17,6 +19,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# the directory that holds the geotiff_tiler_spark package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -43,6 +47,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     # GC selection for the local-mode JVM (driver == all executors): the
     # throughput collector can beat G1 on batch pipelines where 32 task

@@ -109,38 +109,6 @@ def test_ivf_topk_udf_path_matches_expression_path(spark, monkeypatch):
     assert got == want
 
 
-def test_chunked_d2_matmul_kernel():
-    """The matmul-identity kernel is for argmin/argsort selection: it must
-    be (a) deterministic per chunk size and selection-stable across chunk
-    sizes, (b) numerically equal to the expanded-difference form, and
-    (c) argmin-identical to it — including first-minimal-index ties on
-    bit-identical (duplicated) centroids.
-
-    NOT asserted: bit-equality across chunk SIZES. BLAS GEMM picks its
-    blocking/kernel by matrix shape, so m=256 and m=700 can differ in the
-    last ulps (measured 2.8e-14 max on this box) — which is exactly why
-    the kernel is documented as selection-only."""
-    rng = np.random.default_rng(7)
-    X = rng.normal(size=(700, 64))
-    C = rng.normal(size=(33, 64))
-    expanded = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    got = similarity._chunked_d2(X, C, chunk=256)
-    # same chunk size -> bit-identical (deterministic kernel) ...
-    assert (got == similarity._chunked_d2(X, C, chunk=256)).all()
-    # ... different chunk size -> ulp-close and selection-identical
-    full = similarity._chunked_d2(X, C, chunk=10**9)
-    assert np.allclose(got, full, rtol=0, atol=1e-10)
-    assert (got.argmin(axis=1) == full.argmin(axis=1)).all()
-    assert np.allclose(got, expanded, rtol=1e-9, atol=1e-9)
-    assert (got.argmin(axis=1) == expanded.argmin(axis=1)).all()
-    # duplicated centroid -> bit-equal d2 columns -> first index wins,
-    # same as the expanded form
-    Cdup = np.vstack([C, C[:1]])
-    gd = similarity._chunked_d2(X, Cdup)
-    assert (gd[:, 0] == gd[:, -1]).all()
-    assert (gd.argmin(axis=1) == ((X[:, None, :] - Cdup[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)).all()
-
-
 def test_kmeans_fit_unchanged_by_chunking():
     """Chunking must not move the centroids at all (the q36 oracle replays
     kmeans_fit, so any drift would break the contract)."""
@@ -190,16 +158,18 @@ def test_label_polygon_edges_match_wkb_roundtrip():
 def test_nearest_centroids_matches_argsort_oracle():
     """The selection kernel must agree with a naive full-argsort oracle on
     both regimes (<=64 lists: stable argsort; >64: argpartition+lexsort),
-    for p=1 and p>1."""
+    for p=1 and p>1 — and on a duplicated centroid, whose bit-equal d2
+    column must lose to the first index exactly as in the oracle."""
     rng = np.random.default_rng(3)
     X = rng.normal(size=(333, 16))
-    for nlist in (8, 200):
-        C = rng.normal(size=(nlist, 16))
+    C8 = rng.normal(size=(8, 16))
+    C200 = rng.normal(size=(200, 16))
+    for C in (C8, C200, np.vstack([C8, C8[:1]])):
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         for p in (1, 3):
             want = np.argsort(d2, axis=1, kind="stable")[:, :p]
             got = similarity._nearest_centroids(X, C, p=p, chunk=100)
-            assert (got == want).all(), (nlist, p)
+            assert (got == want).all(), (len(C), p)
 
 
 def test_cosine_topk_scan_matches_allpairs_bitexact(spark):
@@ -266,3 +236,59 @@ def test_cosine_pair_arrow_kernel_matches_prenormed_fold(spark):
     assert old.keys() == new.keys() and len(old) > 50
     for kk in old:
         assert struct.pack("d", old[kk]) == struct.pack("d", new[kk]), kk
+
+
+def test_vec_matrix_rejects_null_and_ragged_vectors():
+    """The one Arrow -> numpy vector path: exact float32 -> float64
+    widening, slice offsets honored, and a ValueError naming the column
+    for every input that flattening alone would reshape into a wrong
+    matrix (64 x 64 with one null vector used to come back as (64, 63))."""
+    import pyarrow as pa
+
+    f32 = pa.list_(pa.float32())
+    rows = [[float(v) for v in np.random.default_rng(i).normal(size=64)] for i in range(64)]
+    good = pa.array(rows, f32)
+    X = similarity._vec_matrix(good, "embedding")
+    assert X.shape == (64, 64) and X.dtype == np.float64
+    assert (X == np.asarray(rows, dtype=np.float32).astype(np.float64)).all()
+    assert (similarity._vec_matrix(good.slice(10, 5), "embedding") == X[10:15]).all()
+    assert similarity._vec_matrix(good.slice(0, 0), "embedding", 64).shape == (0, 64)
+
+    with pytest.raises(ValueError, match="'embedding': 1 null vector"):
+        similarity._vec_matrix(pa.array(rows[:5] + [None] + rows[6:], f32), "embedding")
+    with pytest.raises(ValueError, match="'embedding': 1 null element"):
+        similarity._vec_matrix(pa.array(rows[:1] + [rows[1][:-1] + [None]] + rows[2:], f32), "embedding")
+    # 63 + 65 values: the flat length still divides by 64, so a reshape
+    # alone would succeed
+    ragged = rows[:10] + [rows[10][:63], rows[11] + [0.5]] + rows[12:]
+    with pytest.raises(ValueError, match="'embedding': ragged vectors, lengths 63..65"):
+        similarity._vec_matrix(pa.array(ragged, f32), "embedding")
+    with pytest.raises(ValueError, match="ragged vectors.*expected 32"):
+        similarity._vec_matrix(good, "embedding", 32)
+
+
+# One call per vector-search entry point, on a vector column named "feat"
+# so the error text must carry the caller's column name.
+_VECTOR_OPS = {
+    "q16_cosine_topk": lambda df: similarity.cosine_topk(df, k=5, vec_col="feat"),
+    "q17_ann_topk_banded": lambda df: similarity.ann_topk_banded(df, k=5, vec_col="feat"),
+    "q33_neardup_pairs_banded": lambda df: similarity.neardup_pairs_banded(df, vec_col="feat"),
+    "q36_ivf_topk_expr": lambda df: similarity.ivf_topk(df, k=5, n_clusters=8, vec_col="feat"),
+    "q36_ivf_topk_udf": lambda df: similarity.ivf_topk(df, k=5, n_clusters=8, vec_col="feat"),
+    "q44_pq_topk": lambda df: similarity.pq_topk(df, k=5, vec_col="feat"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_VECTOR_OPS))
+def test_vector_ops_reject_null_vectors_and_pass_empty_input(spark, monkeypatch, op):
+    """A null embedding fails loudly with the vector column's name (no
+    silently wrong neighbours); an empty input gives zero rows."""
+    if op.endswith("_udf"):
+        monkeypatch.setattr(similarity, "IVF_EXPR_MAX_LISTS", 0)
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(v) for v in rng.normal(size=64)]) for i in range(200)]
+    rows[7] = (7, None)  # not a query row (query_mod 25): the corpus side must catch it
+    df = spark.createDataFrame(rows, "vec_id long, feat array<float>")
+    with pytest.raises(Exception, match="vector column 'feat': 1 null vector"):
+        _VECTOR_OPS[op](df).collect()
+    assert _VECTOR_OPS[op](df.limit(0)).collect() == []

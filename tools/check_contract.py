@@ -11,12 +11,13 @@ Usage: python tools/check_contract.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -45,8 +46,6 @@ def normalize(rows, cols):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-
-    import os
 
     # generated-literal oracles (q28/q36) derive their constants from the
     # parquet tables; point them at the same dir the views read from
